@@ -1,0 +1,1 @@
+"""Standalone benchmark for the spark-graft engine; see ``run.py``."""
