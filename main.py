@@ -19,9 +19,11 @@ Same roles as ``/root/reference/main.py:13-48`` (``producer``,
                    spark_job2.py semantics, explicit schemas, no
                    inferSchema).
 - ``stream-job1/2``— bonus: both reference jobs' plans as continuous
-                   pipelines (Kafka -> parse -> stream-stream join ->
-                   windowed agg -> alerts), which the reference's design
-                   doc aspired to but never wired up.
+                   pipelines (Kafka -> parse -> keyed pairing of the two
+                   topics per (ts, server_id) -> windowed agg -> alerts),
+                   which the reference's design doc aspired to but never
+                   wired up. A checkpoint written by the earlier
+                   stream-stream-join plan cannot be resumed.
 
 Usage: python main.py <role> [--config config.yaml] [--parquet] [--dry-run]
 """

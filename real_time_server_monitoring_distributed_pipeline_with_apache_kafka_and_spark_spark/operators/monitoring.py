@@ -10,9 +10,17 @@ Every function is ``DataFrame -> DataFrame`` and works identically on batch
 and streaming inputs (Structured Streaming compiles the same logical plan).
 
 Scale notes (100 TB posture):
-- The join shuffles both sides on (ts, entity) - at scale, pre-bucketing the
-  landed tables on the entity key or ingesting via one wide Kafka topic
-  removes this shuffle entirely. AQE handles skewed hot entities.
+- The batch join shuffles both sides on (ts, entity) - at scale,
+  pre-bucketing the landed tables on the entity key or ingesting via one
+  wide Kafka topic removes this shuffle entirely. AQE handles skewed hot
+  entities.
+- Streams pair the topics with :func:`paired_window_agg` instead: a union
+  and a per-(ts, entity) aggregation, one shuffle of the union and one
+  state store per partition where a stream-stream join keeps four (both
+  sides' rows and match counts). A stream trigger's fixed cost is mostly
+  state-store commits, so going from five stores per partition (join plus
+  window) to two cuts it; the per-key state is a few counters, not
+  buffered rows.
 - The windowed agg is a hash aggregate with map-side partial aggregation;
   the sliding window multiplies rows by duration/slide (3x here) *after*
   partial aggregation, so the expansion happens on grouped keys, not events.
@@ -62,6 +70,72 @@ def sliding_window_agg(
         F.window(F.col(ts_col), window.duration, window.slide),
     )
     return grouped.agg(*[col.alias(name) for name, col in aggs.items()])
+
+
+def paired_window_agg(
+    left: DataFrame,
+    right: DataFrame,
+    aggs: dict[str, tuple[str, str]],
+    entity_col: str = "server_id",
+    window: WindowConfig | None = None,
+) -> DataFrame:
+    """J1/J2 + A1/A2 without the join: the sliding-window aggregate of the
+    inner join of ``left`` and ``right`` on (ts, entity), computed as a
+    union and two keyed aggregations.
+
+    ``aggs`` maps an output name to ``(kind, column)``; ``kind`` is
+    ``"avg"`` or ``"max"`` and ``column`` belongs to exactly one side.
+
+    1. Union the sides. Each keeps its own watermark, so a stream's
+       global watermark is still the min over the sides.
+    2. Aggregate per (entity, ts): each side's row count, and per metric
+       its sum and non-NULL count (avg) or its max. Keep only the keys
+       present on both sides; NULL keys are dropped, as the join drops
+       them.
+    3. Window those keys. A key with ``n_l`` left and ``n_r`` right rows
+       stands for ``n_l * n_r`` joined pairs, so a left average is
+       ``sum(sum_c * n_r) / sum(nonnull_c * n_r)``: exactly the mean over
+       the join's pairs, duplicates and NULL values included. A max does
+       not depend on the pair count.
+
+    On a stream both aggregations run in append mode in the same trigger,
+    so a window comes out in the trigger the join-based plan emits it in,
+    with two state stores per partition instead of the join's four plus
+    the window's one.
+    """
+    keys = [entity_col, "ts"]
+    side_cols = {"l": [], "r": []}
+    per_key = [F.count("__l").alias("__n_l"), F.count("__r").alias("__n_r")]
+    per_window = {}
+    for name, (kind, col) in aggs.items():
+        if col in keys or (col in left.columns) == (col in right.columns):
+            raise ValueError(f"{name}: column {col!r} must belong to exactly one side")
+        side = "l" if col in left.columns else "r"
+        side_cols[side].append(col)
+        if kind == "max":
+            per_key.append(F.max(col).alias(f"__max_{name}"))
+            per_window[name] = F.max(f"__max_{name}")
+        elif kind == "avg":
+            pairs = F.col("__n_r" if side == "l" else "__n_l")
+            per_key += [F.sum(col).alias(f"__sum_{name}"), F.count(col).alias(f"__nn_{name}")]
+            per_window[name] = F.try_divide(
+                F.sum(F.col(f"__sum_{name}") * pairs), F.sum(F.col(f"__nn_{name}") * pairs)
+            )
+        else:
+            raise ValueError(f"{name}: kind must be 'avg' or 'max', got {kind!r}")
+
+    def project(df: DataFrame, side: str) -> DataFrame:
+        cols = dict.fromkeys(side_cols[side])
+        return df.select(*keys, *cols, F.lit(True).alias(f"__{side}"))
+
+    unioned = project(left, "l").unionByName(project(right, "r"), allowMissingColumns=True)
+    keyed = (
+        unioned.where(F.col(entity_col).isNotNull() & F.col("ts").isNotNull())
+        .groupBy(*keys)
+        .agg(*per_key)
+        .where((F.col("__n_l") > 0) & (F.col("__n_r") > 0))
+    )
+    return sliding_window_agg(keyed, per_window, "ts", entity_col, window)
 
 
 _DURATION_UNITS = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,

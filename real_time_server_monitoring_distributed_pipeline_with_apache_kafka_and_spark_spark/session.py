@@ -65,13 +65,27 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def local_cpus() -> int:
+    """Cores this process may run on: $SPARK_GRAFT_CPUS if set, else the
+    CPU affinity mask (``os.cpu_count`` counts the host's cores, which a
+    pinned or containerised process cannot use). Platforms without an
+    affinity mask (macOS, Windows) fall back to ``os.cpu_count``."""
+    env = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
+    if env:
+        return env
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 4
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
 
     Shuffle parallelism: ONLY when the session still carries Spark's
     untouched 200-partition default (the external verification driver
     builds a bare session — 200 schedules ~3x more tasks than local
-    cores, pure overhead at small SF) is it resized to the machine. A
+    cores, pure overhead at small SF) is it resized to 2x
+    :func:`local_cpus`, the core count ``get_spark`` uses. A
     session whose owner SET shuffle partitions (a real cluster sized for
     1000 executors) is respected — clobbering that to 2x driver cores
     would be the real scale bug. An owner who DELIBERATELY wants exactly
@@ -85,7 +99,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     keep = os.environ.get("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS", "") == "1"
     if not keep and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
         spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(2 * (os.cpu_count() or 4), 8))
+            "spark.sql.shuffle.partitions", str(max(2 * local_cpus(), 8))
         )
     return spark
 
@@ -97,12 +111,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a local session with engine defaults.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
+    ``cpus`` defaults to :func:`local_cpus`. Shuffle partitions
     default to 2x cores for local mode (at cluster scale this is instead
     governed by AQE's target advisory size).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
+        cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
     builder = (

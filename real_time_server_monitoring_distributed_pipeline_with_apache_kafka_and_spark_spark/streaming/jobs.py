@@ -1,12 +1,18 @@
 """Streaming analytics legs: the reference jobs under Structured Streaming.
 
-The batch operator library (operators/monitoring.py) is reused verbatim -
+The batch operator library (operators/monitoring.py) is reused -
 Structured Streaming compiles the same logical plan into an incremental
-one. What streaming adds on top (SURVEY.md SS2.7):
+one. The one streaming-specific choice there is the reference jobs'
+pairing: the alert jobs pair their two metric topics with
+``paired_window_agg`` (union + keyed aggregation per (ts, entity)), which
+yields the batch join's windows with two state stores per partition
+instead of a stream-stream join's five. What streaming adds on top
+(SURVEY.md SS2.7):
 
 - watermarks (T3): the reference has NO late-data policy (batch emit-once);
-  we bound state with ``withWatermark`` so the 30s/10s window state and the
-  stream-stream join buffers don't grow forever.
+  we bound state with ``withWatermark`` so the 30s/10s window state, the
+  per-(ts, entity) pairing state and the interval joins' buffers don't
+  grow forever.
 - output modes: ``append`` emits each window once, after the watermark
   passes its end (closest to the reference's emit-once-at-end semantics,
   continuously).
@@ -36,21 +42,21 @@ def streaming_cpu_mem_job(
     entity_col: str = "server_id",
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """spark_job1 as a continuous pipeline: stream-stream inner join on
+    """spark_job1 as a continuous pipeline: pair the cpu and mem streams on
     (ts, entity) -> sliding window avg -> CASE alert.
 
-    The join IS the reference's implicit stream-alignment (SURVEY SS2.3):
-    topics interleave arbitrarily, the watermark bounds how long one side
-    waits for the other before its join state is evicted.
+    The pairing is the reference's implicit stream alignment (SURVEY
+    SS2.3), done as a union and a keyed aggregation
+    (:func:`operators.monitoring.paired_window_agg`) instead of a
+    stream-stream join: the averages equal the batch join's, and each
+    trigger keeps two state stores per partition instead of five. Topics
+    interleave arbitrarily; the watermark bounds how long a (ts, entity)
+    key waits for its other side before it is closed.
     """
-    joined = ops.join_metric_streams(
+    agged = ops.paired_window_agg(
         watermarked(cpu, delay=watermark),
         watermarked(mem, delay=watermark),
-        keys=("ts", entity_col),
-    )
-    agged = ops.sliding_window_agg(
-        joined,
-        {"avg_cpu": F.avg("cpu_pct"), "avg_mem": F.avg("mem_pct")},
+        {"avg_cpu": ("avg", "cpu_pct"), "avg_mem": ("avg", "mem_pct")},
         entity_col=entity_col,
         window=config.window,
     )
@@ -72,18 +78,14 @@ def streaming_net_disk_job(
     entity_col: str = "server_id",
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """spark_job2 as a continuous pipeline: stream-stream inner join on
-    (ts, entity) -> sliding window max -> CASE alert. Mirror of
+    """spark_job2 as a continuous pipeline: pair the net and disk streams
+    on (ts, entity) -> sliding window max -> CASE alert. Mirror of
     :func:`streaming_cpu_mem_job` on the net/disk metric pair
     (spark_job2.py:18-44 semantics)."""
-    joined = ops.join_metric_streams(
+    agged = ops.paired_window_agg(
         watermarked(net, delay=watermark),
         watermarked(disk, delay=watermark),
-        keys=("ts", entity_col),
-    )
-    agged = ops.sliding_window_agg(
-        joined,
-        {"max_net_in": F.max("net_in"), "max_disk_io": F.max("disk_io")},
+        {"max_net_in": ("max", "net_in"), "max_disk_io": ("max", "disk_io")},
         entity_col=entity_col,
         window=config.window,
     )

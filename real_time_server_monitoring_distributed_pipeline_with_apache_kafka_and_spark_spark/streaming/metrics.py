@@ -9,10 +9,12 @@ observability channels as typed DataFrames:
 
 - ``ProgressRecorder`` — a ``StreamingQueryListener`` capturing every
   micro-batch's ``QueryProgressEvent``: input rows, input/processed
-  rows-per-second, trigger duration, stateful-operator state size, and
-  any ``observe()`` metrics riding the batch. Listener callbacks run on
-  the DRIVER, one event per micro-batch — O(1) driver work per trigger
-  and a bounded deque, so attaching it costs nothing at any data scale.
+  rows-per-second, trigger duration, stateful-operator state size, state
+  store instances and commit time (a trigger's fixed cost grows with
+  both), and any ``observe()`` metrics riding the batch. Listener
+  callbacks run on the DRIVER, one event per micro-batch — O(1) driver
+  work per trigger and a bounded deque, so attaching it costs nothing at
+  any data scale.
 - ``observed`` / ``observation_row`` — ``Dataset.observe`` data-quality
   counters (row counts, null counts, domain violations) computed as
   accumulator-style aggregates INSIDE the existing job: no second scan,
@@ -47,6 +49,8 @@ PROGRESS_SCHEMA = T.StructType(
         T.StructField("processed_rows_per_second", T.DoubleType(), True),
         T.StructField("trigger_execution_ms", T.LongType(), True),
         T.StructField("state_rows_total", T.LongType(), True),
+        T.StructField("state_store_instances", T.LongType(), True),
+        T.StructField("state_commit_ms", T.LongType(), True),
         T.StructField("observed", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
@@ -71,9 +75,11 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        state_rows = None
+        state_rows = state_stores = state_commit_ms = None
         if p.stateOperators:
             state_rows = sum(s.numRowsTotal for s in p.stateOperators)
+            state_stores = sum(s.numStateStoreInstances for s in p.stateOperators)
+            state_commit_ms = sum(s.commitTimeMs for s in p.stateOperators)
         observed = (
             {
                 f"{group}.{k}": str(v)
@@ -92,6 +98,8 @@ class ProgressRecorder(StreamingQueryListener):
             processed_rows_per_second=float(p.processedRowsPerSecond or 0.0),
             trigger_execution_ms=p.durationMs.get("triggerExecution"),
             state_rows_total=state_rows,
+            state_store_instances=state_stores,
+            state_commit_ms=state_commit_ms,
             observed=observed,
         )
         with self._lock:

@@ -72,3 +72,36 @@ def test_runtime_confs_respect_user_shuffle_partitions(spark):
             del _os.environ["SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS"]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_runtime_confs_size_bare_session_from_spark_graft_cpus(spark, monkeypatch):
+    """A bare-default session (shuffle partitions at Spark's untouched 200)
+    is resized from $SPARK_GRAFT_CPUS, the core count get_spark uses, not
+    from the host's core count; without the variable the CPU affinity mask
+    decides."""
+    import os as _os
+
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        apply_runtime_confs,
+        local_cpus,
+    )
+
+    bare = spark.newSession()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    monkeypatch.delenv("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS", raising=False)
+    assert local_cpus() == 6
+    bare.conf.set("spark.sql.shuffle.partitions", "200")
+    apply_runtime_confs(bare)
+    assert bare.conf.get("spark.sql.shuffle.partitions") == "12"
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    if hasattr(_os, "sched_getaffinity"):
+        assert local_cpus() == len(_os.sched_getaffinity(0))
+    bare.conf.set("spark.sql.shuffle.partitions", "200")
+    apply_runtime_confs(bare)
+    assert bare.conf.get("spark.sql.shuffle.partitions") == str(max(2 * local_cpus(), 8))
+
+    # Without an affinity mask (macOS, Windows) the host's core count is
+    # the best there is.
+    monkeypatch.delattr(_os, "sched_getaffinity", raising=False)
+    assert local_cpus() == (_os.cpu_count() or 4)

@@ -470,9 +470,22 @@ def test_rate_replay_backpressure_bounds_batches(spark):
         )
 
 
+def _final_watermark(q):
+    """The watermark the query's last batch ran with, as the naive local
+    datetime PySpark collects timestamps as."""
+    import datetime
+
+    wm = datetime.datetime.fromisoformat(q.lastProgress["eventTime"]["watermark"].replace("Z", "+00:00"))
+    return wm.astimezone().replace(tzinfo=None)
+
+
 def test_streaming_net_disk_job_matches_batch(spark, tmp_path):
-    """stream-job2's plan (stream-stream join -> window max -> CASE) over
-    file streams equals the batch net_disk_job on the same rows."""
+    """stream-job2's plan (paired aggregation -> window max -> CASE) over
+    file streams equals the batch net_disk_job on the same rows: every
+    window closed by the final watermark comes out exactly once with the
+    batch values, and no other window comes out."""
+    import datetime
+
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
         net_disk_job,
     )
@@ -493,20 +506,207 @@ def test_streaming_net_disk_job_matches_batch(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        got = {
-            (r.server_id, r.window_start, r.max_net_in, r.max_disk_io, r.alert)
+        last_ts = wide.agg(F.max("ts")).first()[0]
+        _await_watermark(q, last_ts - datetime.timedelta(minutes=1))
+        watermark = _final_watermark(q)
+        got = [
+            (r.server_id, r.window_start, r.window_end, r.max_net_in, r.max_disk_io, r.alert)
             for r in spark.sql("SELECT * FROM nd_stream").collect()
-        }
+        ]
     finally:
         q.stop()
-    batch = {
-        (r.server_id, r.window_start, r.max_net_in, r.max_disk_io, r.alert)
+    want = {
+        (r.server_id, r.window_start, r.window_end, r.max_net_in, r.max_disk_io, r.alert)
         for r in net_disk_job(net, disk).collect()
+        if r.window_end <= watermark
     }
-    # append mode emits only watermark-closed windows; every emitted row
-    # must match batch exactly, and most windows should have closed
-    assert got <= batch
-    assert len(got) >= 0.8 * len(batch), (len(got), len(batch))
+    assert len(got) == len(set(got)), "a window came out twice"
+    assert set(got) == want
+    assert want
+
+
+def _await_watermark(q, target, timeout: float = 60.0) -> None:
+    """Wait for the no-data batch that applies the watermark the fed data
+    implies: processAllAvailable can return before it runs."""
+    deadline = time.time() + timeout
+    while _final_watermark(q) < target:
+        assert time.time() < deadline, (q.lastProgress, target)
+        time.sleep(0.1)
+
+
+def test_streaming_cpu_mem_job_matches_batch(spark, tmp_path):
+    """stream-job1 over Kafka-shaped wire messages, one file per
+    micro-batch, equals the batch cpu_mem_job on the same messages. The
+    feed has the cases the pairing must get right: mem lags cpu by one
+    micro-batch, a (ts, server) key is sent twice on cpu, a cpu value is
+    NULL, malformed messages parse to NULL keys, a mem message arrives
+    one micro-batch late but inside the watermark, a key and a whole
+    server never get their mem side, and a cpu message arrives beyond the
+    watermark. Only the last is dropped: the batch reference leaves it
+    out.
+
+    Metric values are multiples of 0.25, so every sum is exact in double
+    and both plans divide the same sum by the same count: rounded
+    averages agree exactly, not merely to a rounding step."""
+    import datetime
+    import random
+
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
+        cpu_mem_job,
+    )
+
+    rng = random.Random(7)
+    base = datetime.datetime(2024, 1, 1)
+    servers = [f"server_{i}" for i in range(1, 5)]
+    blocks, block_s, watermark_s = 6, 20, 10
+
+    def msg(topic, second, sid, value):
+        ts = base + datetime.timedelta(seconds=second)
+        return (topic, f"{ts:%Y-%m-%d %H:%M:%S},{sid},{value}")
+
+    def block(k, topic):
+        return {
+            (second, sid): msg(topic, second, sid, rng.randrange(0, 400) / 4)
+            for second in range(k * block_s, (k + 1) * block_s)
+            for sid in servers
+        }
+
+    cpu = [block(k, "topic-cpu") for k in range(blocks)]
+    mem = [block(k, "topic-mem") for k in range(blocks)]
+    cpu[0][7, "server_4"] = msg("topic-cpu", 7, "server_4", "")  # NULL value
+    del mem[2][50, "server_2"]  # this key never gets its mem side
+    late_in = mem[1].pop((39, "server_1"))
+    beyond = msg("topic-cpu", 5, "server_2", 99.75)
+    # File k carries cpu block k and mem block k-1: the mem topic lags.
+    files = [
+        [*(cpu[k].values() if k < blocks else []), *(mem[k - 1].values() if k else [])]
+        for k in range(blocks + 1)
+    ]
+    files[0].append(msg("topic-cpu", 3, "server_3", 88.5))  # duplicate key
+    files[1] += [
+        ("topic-cpu", "not,a,message"),
+        ("topic-mem", "garbage"),
+        # Valid ts, empty server id: a NULL key on both topics, which the
+        # join never pairs.
+        msg("topic-cpu", 25, "", 50.5),
+        msg("topic-mem", 25, "", 60.5),
+        # A server that only ever reports cpu has no window at all.
+        *(msg("topic-cpu", second, "server_9", 12.5) for second in range(20, 30)),
+    ]
+    # Withheld from file 2, where the watermark is still below its ts.
+    files[3].append(late_in)
+    files[blocks].append(beyond)
+
+    src = tmp_path / "wire"
+    src.mkdir()
+    records = (
+        spark.readStream.schema("topic STRING, value STRING")
+        .option("sep", "\t")
+        .option("maxFilesPerTrigger", "1")
+        .csv(str(src))
+    )
+    out = jobs.streaming_cpu_mem_job(
+        parse.demux_topic(records, "topic-cpu", "cpu"),
+        parse.demux_topic(records, "topic-mem", "mem"),
+        watermark=f"{watermark_s} seconds",
+    )
+    q = out.writeStream.outputMode("append").format("memory").queryName("cm_stream").start()
+    try:
+        for k, lines in enumerate(files):
+            (src / f"part-{k:03d}.tsv").write_text("".join(f"{t}\t{v}\n" for t, v in lines))
+            q.processAllAvailable()
+        # The wire timestamps are UTC (the session time zone); the
+        # watermark is read back as a naive local datetime.
+        target = base + datetime.timedelta(seconds=blocks * block_s - 1 - watermark_s)
+        _await_watermark(
+            q, target.replace(tzinfo=datetime.timezone.utc).astimezone().replace(tzinfo=None)
+        )
+        watermark = _final_watermark(q)
+        got = spark.sql("SELECT * FROM cm_stream").collect()
+        dropped = sum(
+            s.get("numRowsDroppedByWatermark", 0)
+            for p in q.recentProgress
+            for s in p["stateOperators"]
+        )
+    finally:
+        q.stop()
+
+    sent = [m for lines in files for m in lines if m != beyond]
+    batch_records = spark.createDataFrame(sent, "topic STRING, value STRING")
+    want = {
+        (r.server_id, r.window_start, r.window_end): r
+        for r in cpu_mem_job(
+            parse.demux_topic(batch_records, "topic-cpu", "cpu"),
+            parse.demux_topic(batch_records, "topic-mem", "mem"),
+        ).collect()
+        if r.window_end <= watermark
+    }
+    keys = [(r.server_id, r.window_start, r.window_end) for r in got]
+    assert len(keys) == len(set(keys)), "a window came out twice"
+    assert set(keys) == set(want), (set(keys) ^ set(want))
+    for r in got:
+        w = want[(r.server_id, r.window_start, r.window_end)]
+        assert abs(r.avg_cpu - w.avg_cpu) <= 1e-9 and abs(r.avg_mem - w.avg_mem) <= 1e-9, (r, w)
+        assert r.alert == w.alert, (r, w)
+    # Windows end every 10 s; the final watermark (second 109) closes
+    # those ending at seconds 10..100.
+    assert len(want) == len(servers) * ((blocks * block_s - 1 - watermark_s) // 10)
+    assert dropped == 1
+
+
+def test_paired_window_agg_rejects_ambiguous_metrics(spark):
+    """A metric must name a column of exactly one side and a known kind:
+    the pair weighting depends on which side a column comes from."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
+        paired_window_agg,
+    )
+
+    cpu, mem, _, _ = narrow_splits(metrics_wide_df(spark))
+    for aggs in ({"x": ("avg", "ts")}, {"x": ("avg", "server_id")}, {"x": ("avg", "net_in")}):
+        with pytest.raises(ValueError, match="exactly one side"):
+            paired_window_agg(cpu, mem, aggs)
+    with pytest.raises(ValueError, match="exactly one side"):
+        paired_window_agg(cpu, cpu, {"x": ("max", "cpu_pct")})
+    with pytest.raises(ValueError, match="kind"):
+        paired_window_agg(cpu, mem, {"x": ("sum", "cpu_pct")})
+
+
+def _stateful_progress(spark, tmp_path, job, name):
+    """Run ``job`` over the narrow fixture splits and return its progress."""
+    wide = metrics_wide_df(spark)
+    cpu, mem, net, disk = narrow_splits(wide)
+    pair = (cpu, mem) if job is jobs.streaming_cpu_mem_job else (net, disk)
+    streams = []
+    for side, df in zip("lr", pair):
+        path = str(tmp_path / f"{name}_{side}")
+        write_csv_batch(df, path)
+        streams.append(spark.readStream.schema(df.schema).csv(path))
+    q = job(*streams).writeStream.outputMode("append").format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+        return plan, list(q.recentProgress)
+    finally:
+        q.stop()
+
+
+@pytest.mark.parametrize("job", ["streaming_cpu_mem_job", "streaming_net_disk_job"])
+def test_streaming_alert_jobs_state_store_census(spark, tmp_path, job):
+    """Weather-free pin on the streaming alert jobs' trigger fixed cost:
+    the metric streams are paired by a keyed aggregation, not a
+    stream-stream join, so every trigger commits two stateful operators
+    with one store per stateful partition each (16 at 8 partitions; the
+    join-based plan had 40)."""
+    plan, progress = _stateful_progress(spark, tmp_path, getattr(jobs, job), f"census_{job}")
+    # Tree strings name nodes without the Exec suffix.
+    assert "StreamingSymmetricHashJoin" not in plan
+    assert plan.count("StateStoreSave") == 2
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert progress
+    for p in progress:
+        ops = p["stateOperators"]
+        assert len(ops) == 2, ops
+        assert sum(s["numStateStoreInstances"] for s in ops) == 2 * parts, ops
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -2478,9 +2678,32 @@ def test_progress_recorder_captures_microbatch_metrics(spark, tmp_path):
     # observe() metrics ride the progress event, flattened group.metric
     assert all(r.observed and "quality.n_rows" in r.observed for r in fed)
     assert sum(int(r.observed["quality.n_rows"]) for r in fed) == n_fixture
+    # A stateless query has no state stores to count or commit.
+    assert all(r.state_store_instances is None and r.state_commit_ms is None for r in mine)
+
+    # A stateful one reports, per batch, the fixed-cost drivers: store
+    # instances (one per stateful operator and partition) and commit time.
+    spark.streams.addListener(rec)
+    try:
+        _, progress = _stateful_progress(spark, tmp_path, jobs.streaming_net_disk_job, "obs_state")
+        sid = progress[0]["id"]
+        deadline = time.time() + 30
+        while len([r for r in rec.rows() if r.query_id == sid]) < len(progress):
+            assert time.time() < deadline
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(rec)
+    stateful = [r for r in rec.rows() if r.query_id == sid]
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for r, p in zip(sorted(stateful, key=lambda r: r.batch_id), progress):
+        ops = p["stateOperators"]
+        assert r.state_store_instances == sum(s["numStateStoreInstances"] for s in ops) == 2 * parts
+        assert r.state_commit_ms == sum(s["commitTimeMs"] for s in ops) >= 0
+
     hist = rec.to_df(spark)
     assert hist.schema == PROGRESS_SCHEMA
     assert hist.filter(F.col("query_id") == qid).count() == len(mine)
+    assert hist.filter(F.col("query_id") == sid).count() == len(stateful)
 
 
 def test_observed_requires_a_metric(spark):
